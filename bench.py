@@ -1778,22 +1778,17 @@ def _scale_benches(
     return out
 
 
-def _prior_round_timings() -> dict[str, float]:
-    """Per-query timings from the latest recorded driver round
-    (BENCH_r{N}.json), used as the noise reference: an entry whose
-    fresh value exceeds 1.3x its prior-round value is re-measured
-    before recording (VERDICT r5 item 3 / r7 item 4 — per-entry
-    min-of-two within ONE pass does not remove suite-level host
-    contention; a targeted second pass later in the run does)."""
+def _driver_line_timings(root: str | None = None) -> dict[str, float]:
+    """Per-query timings of the newest recorded driver line
+    (BENCH_r{N}.json under ``root``, default this file's directory):
+    the names the previous round actually reported, and the primary
+    noise reference. A crashed round's artifact (parsed=null, e.g.
+    BENCH_r09) must not disable the gate for the whole next round, so
+    walk back to the newest non-empty queries dict."""
     import glob as _g
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    files = sorted(_g.glob(os.path.join(here, "BENCH_r*.json")))
-    # newest round with USABLE timings: a crashed round's artifact
-    # (parsed=null, e.g. BENCH_r09) must not disable the gate for the
-    # whole next round — walk back until a non-empty queries dict
-    out: dict[str, float] = {}
-    for path in reversed(files):
+    root = root or os.path.dirname(os.path.abspath(__file__))
+    for path in reversed(sorted(_g.glob(os.path.join(root, "BENCH_r*.json")))):
         try:
             with open(path) as f:
                 d = json.load(f)
@@ -1802,10 +1797,22 @@ def _prior_round_timings() -> dict[str, float]:
                 "queries"
             ) or {}
             if q:
-                out = dict(q)
-                break
+                return dict(q)
         except (OSError, ValueError):
             continue
+    return {}
+
+
+def _prior_round_timings(
+    driver_line: dict[str, float], root: str | None = None
+) -> dict[str, float]:
+    """Noise reference: the driver line's timings, gaps filled from the
+    committed full local record. An entry whose fresh value exceeds
+    1.3x its prior-round value is re-measured before recording
+    (VERDICT r5 item 3 / r7 item 4 — per-entry min-of-two within ONE
+    pass does not remove suite-level host contention; a targeted
+    second pass later in the run does)."""
+    out = dict(driver_line)
     # r19 (measurement-bug fix, documented in OPTIMIZATION_r19.md):
     # the driver's recorded line keeps only the ~57 slowest entries,
     # so 70+ queries had NO prior and an arbitrary in-suite spike on
@@ -1816,9 +1823,9 @@ def _prior_round_timings() -> dict[str, float]:
     # reference. NOTE: main() snapshots this BEFORE any section runs;
     # _flush_partial overwrites BENCH_local_latest.json during the
     # run, so a late read would see this run's own partial data.
+    root = root or os.path.dirname(os.path.abspath(__file__))
     try:
-        here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, "BENCH_local_latest.json")) as f:
+        with open(os.path.join(root, "BENCH_local_latest.json")) as f:
             local_q = json.load(f).get("queries") or {}
         for k, v in local_q.items():
             out.setdefault(k, v)
@@ -1831,7 +1838,8 @@ def main() -> None:
     # snapshot the noise-gate priors BEFORE any section runs:
     # _flush_partial rewrites BENCH_local_latest.json incrementally,
     # so reading it later would compare this run against itself
-    prior = _prior_round_timings()
+    driver_line = _driver_line_timings()
+    prior = _prior_round_timings(driver_line)
 
     spark = get_spark("gis-etl-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -2027,7 +2035,9 @@ def main() -> None:
     }
     line = compact_final_line(
         timings, sections, result["sf"], ERRORS,
-        prior_names=tuple(prior),
+        # only the names the driver line reported: the merged priors
+        # hold every local name too, which would make the order inert
+        prior_names=tuple(driver_line),
     )
     assert len(line) <= FINAL_LINE_BUDGET, len(line)
     print(line)

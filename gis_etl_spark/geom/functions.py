@@ -220,22 +220,42 @@ def st_centroid_hex_cell(geom: Column, res: int = 7) -> Column:
     200k-row heatmap); this kernel is ~0.1 µs/row on the same batch.
     Bit parity: tests/test_layout.py asserts exact id equality of all
     three paths. NaN/empty centroids → NULL cell."""
-    import numpy as np
-
     from gis_etl_spark.layout.geohex import hex_cell_np
-
-    from pyspark.sql.types import LongType
 
     @F.pandas_udf(LongType())
     def _udf(g: pd.Series) -> pd.Series:
-        xs, ys = K.centroid_batch(list(g))
-        valid = ~(np.isnan(xs) | np.isnan(ys))
-        out = pd.Series([None] * len(xs), dtype="Int64")
-        if valid.any():
-            out[valid] = hex_cell_np(ys[valid], xs[valid], res)
-        return out
+        return _centroid_key(g, lambda y, x: hex_cell_np(y, x, res))
 
     return _udf(geom)
+
+
+@F.pandas_udf(LongType())
+def st_centroid_hilbert(geom: pd.Series) -> pd.Series:
+    """FUSED layout key: WKB → centroid → Hilbert key in ONE Arrow
+    pass (centroid_batch + sfc.hilbert_encode_np). Bit-identical to
+    hilbert_encode(st_centroid(g).y, st_centroid(g).x), which ships
+    every geometry to Python once for the centroid struct and the
+    struct back again for the key. NaN/NULL centroids → NULL key."""
+    from gis_etl_spark.layout.sfc import hilbert_encode_np
+
+    # ≤ 2·order = 32 bits: the uint64 → int64 cast is sign-safe
+    return _centroid_key(
+        geom, lambda y, x: hilbert_encode_np(y, x).astype("int64")
+    )
+
+
+def _centroid_key(geom: pd.Series, key_fn) -> pd.Series:
+    """Int64 key per geometry from its centroid: key_fn(ys, xs) over the
+    batch's valid centroids, NULL where the centroid is NaN (NULL,
+    empty or zero-area geometry)."""
+    import numpy as np
+
+    xs, ys = K.centroid_batch(list(geom))
+    valid = ~(np.isnan(xs) | np.isnan(ys))
+    out = pd.Series([None] * len(xs), dtype="Int64")
+    if valid.any():
+        out[valid] = key_fn(ys[valid], xs[valid])
+    return out
 
 
 @F.pandas_udf(BooleanType())

@@ -144,7 +144,7 @@ def read_table_spread(
     results are partition-count independent."""
     df = read_table(spark, sf_dir, name)
     try:
-        size = os.path.getsize(os.path.join(sf_dir, f"{name}.parquet"))
+        size = _table_bytes(os.path.join(sf_dir, f"{name}.parquet"))
     except OSError:
         return df
     raw = spark.conf.get(
@@ -163,6 +163,26 @@ def read_table_spread(
     if size <= max_split:
         df = df.repartition(spark.sparkContext.defaultParallelism)
     return df
+
+
+def _table_bytes(path: str) -> int:
+    """Bytes a scan of `path` reads: the file's size, or for a
+    directory-layout table the sum of its data files. Like Spark's file
+    index it skips `_`/`.`-prefixed files (_SUCCESS, .crc sidecars) and
+    folders (_temporary/ or .spark-staging left by an aborted write). A
+    directory's own getsize is its inode size (~4 KB), which would
+    make any directory table look smaller than one split."""
+    if not os.path.isdir(path):
+        return os.path.getsize(path)
+    total = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        total += sum(
+            os.path.getsize(os.path.join(root, f))
+            for f in files
+            if not f.startswith(("_", "."))
+        )
+    return total
 
 
 def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
@@ -279,7 +299,10 @@ def write_clustered_parquet(
     sort (sample → range exchange → per-partition sort), which at
     cluster scale is exactly the balanced bin-packing the reference
     does by hand with resp.json; `maxRecordsPerFile` caps file size the
-    way the reference's 10M-row batches do.
+    way the reference's 10M-row batches do. The range bounds come from a
+    sampling job over `df`'s plan, so an expensive plan runs once more
+    for the sample unless its rows are staged behind an exchange first
+    (merge_compact hash-partitions its keyed rows for that reason).
 
     zstd_level defaults to 3 (parquet-mr's default; the hot path). Pass
     ZSTD_ARCHIVAL_LEVEL (22, the reference's archival setting) for

@@ -71,7 +71,13 @@ def _graph_key(spark: SparkSession, sf_dir: str) -> tuple:
     # session, which would hand back DataFrames bound to a dead JVM.
     parts = [spark.sparkContext.applicationId]
     for t in ("orders", "lineitem"):
-        st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
+        try:
+            st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
+        except FileNotFoundError as e:
+            raise FileNotFoundError(
+                f"graph input table {t!r} not found in sf_dir {sf_dir!r} "
+                f"(expected {t}.parquet)"
+            ) from e
         parts += [st.st_mtime_ns, st.st_size]
     return tuple(parts)
 

@@ -15,6 +15,11 @@ Scale notes (100 TB):
 - merge_compact's global Hilbert sort is a range-partitioned sort:
   Spark samples the key distribution, so output files are
   size-balanced without the reference's manual resp.json bin-packing.
+  The keyed rows pass one hash exchange on the key first, so that
+  sampling job reads shuffle blocks instead of re-running the source
+  decoders, convert and the key kernel over the whole input;
+- the Arrow Hilbert key is one hop (WKB → centroid → key in a single
+  pandas UDF), not a centroid struct round trip plus a second key UDF.
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ from pyspark.sql import functions as F
 from gis_etl_spark.geom.functions import (
     st_bbox,
     st_centroid,
+    st_centroid_hilbert,
     st_convert_geom,
     st_is_core_type,
     st_shape_type_byte,
@@ -33,7 +39,6 @@ from gis_etl_spark.io import write_clustered_parquet
 from gis_etl_spark.layout.sfc import (
     grid_cell,
     grid_cell_boundary_wkt,
-    hilbert_encode,
 )
 
 
@@ -330,19 +335,22 @@ def with_hilbert_key(
     """Attach the layout key: Hilbert index of the centroid, the
     reference's signature ORDER BY expression (east_asia.py:75-77).
 
-    impl="arrow" rides the centroid's already-paid Arrow pass;
-    impl="native" computes the key in pure JVM column arithmetic
+    impl="arrow" is ONE Arrow hop (geom.functions.st_centroid_hilbert:
+    centroid_batch then hilbert_encode_np in the same pandas UDF) —
+    bit-identical to hilbert_encode over a staged st_centroid struct,
+    without shipping the struct out and back. impl="native" stages the
+    centroid and computes the key in pure JVM column arithmetic
     (layout/sfc.with_hilbert_key_native — bit-identical, 13× less
     per-row cost, ~3 s one-time plan analysis), the right trade for
-    corpus-scale merges."""
-    staged = with_centroid(df, geom_col)
-    cy = F.col("centroid").getField("y")
-    cx = F.col("centroid").getField("x")
+    corpus-scale merges. NULL/NaN centroids get a NULL key."""
     if impl == "native":
         from gis_etl_spark.layout.sfc import with_hilbert_key_native
 
+        staged = with_centroid(df, geom_col)
+        cy = F.col("centroid").getField("y")
+        cx = F.col("centroid").getField("x")
         return with_hilbert_key_native(staged, cy, cx).drop("centroid")
-    return staged.withColumn("hkey", hilbert_encode(cy, cx)).drop("centroid")
+    return df.withColumn("hkey", st_centroid_hilbert(F.col(geom_col)))
 
 
 def merge_compact(
@@ -361,11 +369,33 @@ def merge_compact(
     The reference bin-packs files into ≤10M-row batches by hand
     (east_asia.py:384-393); repartitionByRange on the Hilbert key gives
     uniformly-sized, spatially-clustered output splits directly.
+
+    The range sort picks its bounds from a sampling job over its child
+    plan. The keyed rows go through one hash exchange on hkey first, so
+    with AQE that job (and the range shuffle's map stage) reads the
+    staged shuffle blocks: each geometry is decoded and keyed in one
+    pass over the input, not again for the sample. Over convert()
+    output the optimizer inlines the deterministic convert UDF into the
+    key's argument, so that one Python evaluation runs the convert
+    kernel for both the geom and the hkey output. Scale trade: one
+    extra shuffle of the keyed rows instead of one full recompute of
+    the child plan (decode and Python kernels, ~60 µs per geometry on
+    the per-row paths, see geom/wkb.py), which always holds at least
+    the key's Arrow pass (the fused key, or the centroid for
+    key_impl="native"). With key_impl="arrow" on 4 vCPUs the shuffle
+    was the cheaper side both over decode+convert (perfbench
+    etl_buildings) and over a plain parquet input, where only the key
+    is recomputed (bench.py geo_merge_compact_200k 2.6 → 2.0 s).
+    key_impl="native" was not measured.
     key_impl: see with_hilbert_key — "native" for corpus-scale runs.
     zstd_level: None → io.ZSTD_LEVEL (fast default); use
     merge_compact_archival for the reference's level-22 final sink.
     """
-    keyed = with_hilbert_key(df, geom_col, impl=key_impl)
+    # stage the keyed rows once: the range sort's sampling job reads
+    # this exchange instead of recomputing the whole child plan
+    keyed = with_hilbert_key(df, geom_col, impl=key_impl).repartition(
+        F.col("hkey")
+    )
     kwargs = {} if zstd_level is None else {"zstd_level": zstd_level}
     write_clustered_parquet(
         keyed,

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+import pytest
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -80,6 +82,16 @@ def test_pagerank_matches_sequential_reference(spark, sf_dir):
     }
     assert kinds == {"customer", "supplier"}
     assert n == len(set(u for e in edges for u in e))
+
+
+def test_pagerank_missing_input_names_table_and_dir(spark, tmp_path):
+    """A missing input table fails loudly with the table and sf_dir in
+    the message, not with a bare OSError from the memo key."""
+    (tmp_path / "orders.parquet").write_bytes(b"")
+    with pytest.raises(FileNotFoundError) as exc:
+        G.pagerank_trade(spark, str(tmp_path))
+    msg = str(exc.value)
+    assert "table 'lineitem'" in msg and str(tmp_path) in msg
 
 
 def test_spatial_clusters_match_union_find(spark, sf_dir):

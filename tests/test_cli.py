@@ -198,6 +198,53 @@ def test_bench_final_line_keeps_prior_reported_queries():
     assert not any(n in d0["queries"] for n in prior)
 
 
+def test_bench_final_line_ranks_driver_line_names_first(tmp_path):
+    """The final-line order takes only the names of the newest driver
+    line (BENCH_r*.json), not the merged priors: the full local record
+    lists every query, so passing the merged names ranks nothing. A
+    fast name the driver line reported must outrank a slower name it
+    did not report."""
+    import json
+
+    from bench import (
+        FINAL_LINE_BUDGET,
+        _driver_line_timings,
+        _prior_round_timings,
+        compact_final_line,
+    )
+
+    (tmp_path / "BENCH_r01.json").write_text(
+        json.dumps({"parsed": {"queries": {"stale": 9.0}}})
+    )
+    (tmp_path / "BENCH_r02.json").write_text(
+        json.dumps({"parsed": {"queries": {"reported": 3.0}}})
+    )
+    # a crashed round's artifact is skipped, not taken as empty
+    (tmp_path / "BENCH_r03.json").write_text(json.dumps({"parsed": None}))
+    (tmp_path / "BENCH_local_latest.json").write_text(
+        json.dumps({"queries": {"reported": 2.0, "local_only": 8.0}})
+    )
+    driver_line = _driver_line_timings(str(tmp_path))
+    assert driver_line == {"reported": 3.0}
+    prior = _prior_round_timings(driver_line, str(tmp_path))
+    assert prior == {"reported": 3.0, "local_only": 8.0}
+
+    timings = {f"filler_query_number_{i:03d}": 50.0 + i
+               for i in range(300)}
+    timings.update(reported=0.01, local_only=0.02)
+    sections = {"headline": list(timings)}
+    line = compact_final_line(timings, sections, 0.1, {},
+                              prior_names=tuple(driver_line))
+    assert len(line) <= FINAL_LINE_BUDGET
+    order = list(json.loads(line)["queries"])
+    assert order[0] == "reported"
+    assert "local_only" not in order
+    # the merged priors would have ranked the slower local name first
+    merged = list(json.loads(compact_final_line(
+        timings, sections, 0.1, {}, prior_names=tuple(prior)))["queries"])
+    assert merged[:2] == ["local_only", "reported"]
+
+
 def test_cli_incremental_dedup_and_hard_negatives(tmp_path):
     """The r12 subcommands end-to-end in subprocesses; outputs carry
     the contract columns and plausible row counts."""

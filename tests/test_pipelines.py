@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import glob
 import os
+import struct
 
 import pyarrow.parquet as pq
 import pytest
@@ -88,6 +89,102 @@ def test_merge_compact_clusters(bdf, tmp_path):
         if c < b
     )
     assert overlaps == 0, f"file hkey ranges overlap: {ranges}"
+
+
+def _wkb_poly(*rings, word=3, dims=2):
+    out = bytearray(struct.pack("<BII", 1, word, len(rings)))
+    for ring in rings:
+        out += struct.pack("<I", len(ring))
+        for pt in ring:
+            out += struct.pack(f"<{dims}d", *pt[:dims])
+    return bytes(out)
+
+
+_SQUARE = [(100.0, 30.0), (101.0, 30.0), (101.0, 31.0), (100.0, 31.0),
+           (100.0, 30.0)]
+_SQUARE_Z = [(x, y, 7.0) for x, y in _SQUARE]
+_KEY_EDGE_CASES = [
+    None,
+    _wkb_poly(_SQUARE),
+    # degenerate: collinear ring, zero area
+    _wkb_poly([(5.0, 5.0), (6.0, 6.0), (7.0, 7.0), (5.0, 5.0)]),
+    # empty polygon: no rings
+    _wkb_poly(),
+    struct.pack("<BI2d", 1, 1, -170.5, -45.25),
+    struct.pack("<BII6d", 1, 2, 3, 10.0, 10.0, 20.0, 15.0, 30.0, 10.0),
+    # multipolygon of two squares
+    struct.pack("<BII", 1, 6, 2) + _wkb_poly(_SQUARE)
+    + _wkb_poly([(x + 3.0, y - 2.0) for x, y in _SQUARE]),
+    _wkb_poly(_SQUARE_Z, word=1003, dims=3),  # ISO POLYGON Z
+    _wkb_poly(_SQUARE_Z, word=3 | 0x80000000, dims=3),  # EWKB Z flag
+]
+
+
+def test_fused_hilbert_key_is_bit_identical(spark, bdf):
+    """st_centroid_hilbert (one Arrow hop) equals the numpy composition
+    hilbert_encode_np(centroid_batch) and the two-hop Spark key
+    hilbert_encode(st_centroid(g).y, st_centroid(g).x) bit for bit,
+    with NULL keys exactly where the centroid is NaN/NULL."""
+    import numpy as np
+
+    from gis_etl_spark.geom.functions import st_centroid, st_centroid_hilbert
+    from gis_etl_spark.layout.sfc import hilbert_encode, hilbert_encode_np
+
+    fixture = [r.geom for r in bdf.select("geom").collect()]
+    bufs = _KEY_EDGE_CASES + [None if g is None else bytes(g) for g in fixture]
+    xs, ys = K.centroid_batch(bufs)
+    valid = ~(np.isnan(xs) | np.isnan(ys))
+    keys = hilbert_encode_np(ys[valid], xs[valid])
+    want = [None] * len(bufs)
+    for i, k in zip(np.flatnonzero(valid), keys):
+        want[i] = int(k)
+    assert want[0] is None and want[3] is None  # NULL geom, empty polygon
+    assert sum(k is not None for k in want[:len(_KEY_EDGE_CASES)]) >= 7
+
+    sdf = spark.createDataFrame(
+        list(enumerate(bufs)), "i int, geom binary"
+    ).withColumn("c", st_centroid(F.col("geom")))
+    rows = sdf.select(
+        "i",
+        st_centroid_hilbert(F.col("geom")).alias("fused"),
+        hilbert_encode(F.col("c.y"), F.col("c.x")).alias("two_hop"),
+    ).collect()
+    got = {r.i: (r.fused, r.two_hop) for r in rows}
+    assert len(got) == len(bufs)
+    for i, w in enumerate(want):
+        assert got[i] == (w, w), (i, got[i], w)
+
+
+def test_merge_compact_samples_shuffled_keys(bdf, monkeypatch):
+    """merge_compact's sort samples staged rows: the range Exchange's
+    child is one hash Exchange on hkey (no Python evaluation between
+    them), and one Python evaluation node computes hkey, so the key
+    kernel runs once per row instead of again inside the sampling
+    job."""
+    captured = {}
+
+    def capture(df, path, **kwargs):
+        captured["df"], captured["kwargs"] = df, kwargs
+
+    monkeypatch.setattr(P, "write_clustered_parquet", capture)
+    P.merge_compact(P.convert(bdf), "unused")
+    sort_col = captured["kwargs"]["sort_col"]
+    assert sort_col == "hkey"
+    plan = str(
+        captured["df"].orderBy(sort_col)._jdf.queryExecution().executedPlan()
+    )
+    nodes = [ln.lstrip(" :|+-") for ln in plan.splitlines()]
+    i = next(
+        n for n, ln in enumerate(nodes)
+        if ln.startswith("Exchange rangepartitioning(hkey")
+    )
+    assert nodes[i + 1].startswith("Exchange hashpartitioning(hkey"), plan
+    key_evals = [
+        ln for ln in nodes
+        if ln.startswith("ArrowEvalPython") and "hilbert" in ln
+    ]
+    assert len(key_evals) == 1, plan
+    assert "st_centroid_hilbert" in key_evals[0]
 
 
 def test_convert_full_pipeline(spark, bdf):

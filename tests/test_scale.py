@@ -913,3 +913,40 @@ def test_dedup_snapshot_append_rejects_existing_doc_ids(spark, sf_dir):
         append_to_dedup_snapshot(spark, sf_dir, existing)
     for r, t in names.items():
         assert spark.table(t).count() == base[r]
+
+
+def test_read_table_spread_skips_directory_table_larger_than_split(
+    spark, tmp_path
+):
+    """A directory-layout table is sized by its part files, not by the
+    directory inode (~4 KB): one larger than a scan split already reads
+    wide, so read_table_spread must not add a repartition."""
+    from gis_etl_spark.io import read_table_spread
+
+    sf = str(tmp_path)
+    spark.range(0, 20_000, numPartitions=4).withColumn(
+        "pad", F.sha2(F.col("id").cast("string"), 256)
+    ).write.parquet(os.path.join(sf, "wide.parquet"))
+    spark.range(0, 10).coalesce(1).write.parquet(
+        os.path.join(sf, "tiny.parquet")
+    )
+    # an aborted write's leftovers: Spark's file index skips `_` folders,
+    # so they must not count toward the table's size either
+    stale = os.path.join(sf, "tiny.parquet", "_temporary", "0")
+    os.makedirs(stale)
+    with open(os.path.join(stale, "part-00000.parquet"), "wb") as f:
+        f.write(b"\0" * 256 * 1024)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64k")
+    try:
+        def plan(name):
+            df = read_table_spread(spark, sf, name)
+            return str(df._jdf.queryExecution().optimizedPlan())
+
+        assert "Repartition" not in plan("wide")
+        # control: a table under one split is still spread, however
+        # large its stale _temporary files are
+        assert "Repartition" in plan("tiny")
+    finally:
+        spark.conf.set(key, old)
