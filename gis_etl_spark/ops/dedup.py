@@ -1287,12 +1287,16 @@ def label_components(pairs: DataFrame) -> DataFrame:
 
     Small-graph fast path (r18, guide §1.2 step 1 — the distributed
     algorithm first): the edge frame is materialized ONCE
-    (localCheckpoint) and counted; at or below
+    (localCheckpoint) and read back with one bounded collect of at
+    most {LABEL_PROP_DRIVER_MAX_EDGES} + 1 rows; at or below
     {LABEL_PROP_DRIVER_MAX_EDGES} edges (env
     SPARK_GRAFT_CC_DRIVER_EDGES; ~2 MB of longs at the default) the
-    exact union-find runs on the driver — 3 bounded jobs total instead
-    of O(diameter) join+agg rounds — and the result comes back as a
-    local relation. This is the broadcast-join smallness test applied
+    exact union-find runs on the driver on those rows — 2 bounded jobs
+    total instead of O(diameter) join+agg rounds — and the result
+    comes back as a local relation built from an Arrow table with the
+    input's id type, so its scans plan as a JVM LocalTableScan and
+    start no Python workers (a list-built frame is a Scan ExistingRDD
+    over a PythonRDD). This is the broadcast-join smallness test applied
     to the fixpoint: increment/affected-sized graphs (the remediation,
     intra-batch linkage, spatial clusters) stay under it at ANY corpus
     scale by construction, while corpus-wide pair graphs exceed it and
@@ -1300,10 +1304,11 @@ def label_components(pairs: DataFrame) -> DataFrame:
     identical exact transitive closure (oracle-pinned)."""
     spark = pairs.sparkSession
     undirected = pairs.select("doc_a", "doc_b").localCheckpoint()
-    if (
-        undirected.limit(LABEL_PROP_DRIVER_MAX_EDGES + 1).count()
-        <= LABEL_PROP_DRIVER_MAX_EDGES
-    ):
+    rows = undirected.limit(LABEL_PROP_DRIVER_MAX_EDGES + 1).collect()
+    if len(rows) <= LABEL_PROP_DRIVER_MAX_EDGES:
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
         parent: dict = {}
 
         def find(x):
@@ -1314,16 +1319,20 @@ def label_components(pairs: DataFrame) -> DataFrame:
                 parent[x], x = r, parent[x]
             return r
 
-        for row in undirected.collect():
-            a, b = row[0], row[1]
+        for a, b in rows:
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
         dtype = dict(pairs.dtypes)["doc_a"]
+        atype = to_arrow_type(pairs.schema["doc_a"].dataType)
+        nodes = sorted(parent)
         return spark.createDataFrame(
-            [(n, find(n)) for n in sorted(parent)],
+            pa.table({
+                "doc_id": pa.array(nodes, atype),
+                "component": pa.array([find(n) for n in nodes], atype),
+            }),
             f"doc_id {dtype}, component {dtype}",
         )
     pairs = undirected
@@ -1584,8 +1593,9 @@ def _component_labels(
     if cached is None:
         for k in [k for k in _COMPONENT_LABEL_CACHE if k[-1] != app_id]:
             del _COMPONENT_LABEL_CACHE[k]
-        # label_components' result is already localCheckpointed at
-        # loop exit — no second checkpoint needed
+        # no second checkpoint: label_components returns either the
+        # fixpoint's labels, localCheckpointed at loop exit, or (small
+        # graphs) a local relation that plans as a LocalTableScan
         cached = label_components(
             _verified_pair_edges(spark, sf_dir, docs_path)
         )

@@ -86,8 +86,12 @@ def _edges_deg_cached(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """Persisted (edges, degrees), memoized per (session, corpus
-    fingerprint) — one cache entry per dataset, not per builder call."""
+    fingerprint) — one cache entry per dataset, not per builder call.
+    Entries of other (stopped) sessions are evicted: their frames are
+    bound to a dead JVM."""
     key = _graph_key(spark, sf_dir)
+    for k in [k for k in _EDGE_CACHE if k[0] != key[0]]:
+        del _EDGE_CACHE[k]
     if key not in _EDGE_CACHE:
         # r19: the unionAll doubles the distinct's partition count, so
         # the persisted edge frame held 2×shuffle.partitions slivers

@@ -10,11 +10,21 @@ column-for-column — the driver sorts columns by name before hashing.
 Ops DuckDB cannot express (WKB geometry kernels, Hilbert layout,
 streaming) carry oracle=None → rows-only driver check + engine-internal
 golden tests under tests/.
+
+Oracles are resolved on first read, so importing this module does no
+fixture I/O. Many oracle builders generate the fixture files they name
+(media, building sets, FileGDB, shapefiles, the augmented corpus); a
+definition below stores either the SQL string, None, or a zero-arg
+callable, and ``REGISTRY[name]`` calls that callable once and keeps the
+result. A module's ``oracle_sqls()`` pack is built once per process,
+when the first of its entries is read.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import threading
+from collections.abc import Callable, Iterator, Mapping
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -34,6 +44,54 @@ from gis_etl_spark.ops import similarity as S
 from gis_etl_spark.ops import text as T
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+# An oracle as defined: SQL, None (rows-only), or a zero-arg callable
+# returning either, resolved on the entry's first read.
+Oracle = str | None | Callable[[], str | None]
+
+
+class _Pack:
+    """One module's ``oracle_sqls()`` dict, built on the first read of
+    any of its entries. ``pack[name]`` is a zero-arg callable, not SQL."""
+
+    def __init__(self, build: Callable[[], dict[str, str | None]]):
+        self.build = build
+        self._sqls: dict[str, str | None] | None = None
+
+    def sql(self, name: str) -> str | None:
+        if self._sqls is None:
+            self._sqls = self.build()
+        return self._sqls[name]
+
+    def __getitem__(self, name: str) -> Callable[[], str | None]:
+        return partial(self.sql, name)
+
+
+class _Registry(Mapping):
+    """Read-only name -> (builder, oracle_sql | None) over the
+    definitions, in definition order; a callable oracle is called on the
+    entry's first read and the result kept for later reads."""
+
+    def __init__(self, defs: dict[str, tuple[QueryFn, Oracle]]):
+        self._defs = defs
+        self._resolved: dict[str, tuple[QueryFn, str | None]] = {}
+        # one resolution at a time: oracle builders write fixture files
+        self._lock = threading.Lock()
+
+    def __getitem__(self, name: str) -> tuple[QueryFn, str | None]:
+        with self._lock:
+            if name not in self._resolved:
+                builder, oracle = self._defs[name]
+                if callable(oracle):
+                    oracle = oracle()
+                self._resolved[name] = (builder, oracle)
+            return self._resolved[name]
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(self._defs)
+
+    def __len__(self) -> int:
+        return len(self._defs)
+
 
 # ---------------------------------------------------------------------------
 # Relational pack (SURVEY.md §2.3/2.4/2.5/2.7/2.8) — all oracle-checked.
@@ -376,8 +434,8 @@ WHERE s_acctbal = (SELECT max(s2.s_acctbal) FROM supplier s2
 ORDER BY s_suppkey
 """
 
-# name -> (builder, oracle_sql | None)
-REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
+# name -> (builder, oracle); wrapped read-only at the end of the module
+REGISTRY: dict[str, tuple[QueryFn, Oracle]] = {
     "q2_top_acctbal_per_nation": (R.q2_top_acctbal_per_nation, _Q2_SQL),
     "q4_order_priority": (R.q4_order_priority, _Q4_SQL),
     "q7_volume_shipping": (R.q7_volume_shipping, _Q7_SQL),
@@ -515,7 +573,7 @@ FROM assigned GROUP BY 1, 2
 # and WKB-kernel results against the independent golden table.
 # ---------------------------------------------------------------------------
 
-_GEO_SQLS = G.oracle_sqls()
+_GEO_SQLS = _Pack(G.oracle_sqls)
 
 REGISTRY.update(
     {
@@ -628,7 +686,7 @@ REGISTRY.update(
 # (DuckDB runs the native ASOF / IEJoin formulations).
 # ---------------------------------------------------------------------------
 
-_JOIN_SQLS = J.oracle_sqls()
+_JOIN_SQLS = _Pack(J.oracle_sqls)
 
 REGISTRY.update(
     {
@@ -658,7 +716,7 @@ REGISTRY.update(
 # counting, fingerprinting over `documents` — all oracle-checked.
 # ---------------------------------------------------------------------------
 
-_TEXT_SQLS = T.oracle_sqls()
+_TEXT_SQLS = _Pack(T.oracle_sqls)
 
 REGISTRY.update(
     {
@@ -685,7 +743,7 @@ REGISTRY.update(
         # r10: Efraimidis–Spirakis weighted WOR sampling — hash-u
         # deterministic, TakeOrdered top-n (never a global sort)
         "weighted_sample_docs": (
-            T.weighted_sample_docs, T.weighted_sample_sql(),
+            T.weighted_sample_docs, T.weighted_sample_sql,
         ),
         # RAG/training chunking: overlapping token windows, content-md5
         # chunk identity — the oracle re-derives every window by list
@@ -706,36 +764,36 @@ REGISTRY.update(
         # r14: BM25 query scoring over the postings — the serving rung
         # above the champion-list index; fixedpoint score units,
         # deterministic two-term queries from the top corpus tokens
-        "bm25_topk": (T.bm25_topk, T.bm25_topk_sql()),
+        "bm25_topk": (T.bm25_topk, T.bm25_topk_sql),
         # r15: WAND-style champion-list pruning — registered against
         # the SAME oracle as bm25_topk, so the hash match is the
         # equality proof that pruning changes nothing (the
         # mixture_draw_split pattern)
-        "bm25_topk_pruned": (T.bm25_topk_pruned, T.bm25_topk_sql()),
+        "bm25_topk_pruned": (T.bm25_topk_pruned, T.bm25_topk_sql),
         # r15: served from the PERSISTED impact-ordered index (scored
         # postings + champion ranks stored at build time) — same
         # oracle again: the hash match pins stored == fresh
-        "bm25_topk_stored": (T.bm25_topk_stored, T.bm25_topk_sql()),
+        "bm25_topk_stored": (T.bm25_topk_stored, T.bm25_topk_sql),
         # r15: frozen-stats staleness monitor for the stored index —
         # the text analog of ann_drift_stat; the Spark side reads the
         # STORED stats table, the oracle re-derives it from the base
         # corpus, so the hash match pins the artifact too
-        "bm25_stats_drift": (T.bm25_stats_drift, T.bm25_stats_drift_sql()),
+        "bm25_stats_drift": (T.bm25_stats_drift, T.bm25_stats_drift_sql),
         # r15: delta-overlay serving under the gate — stored index ∪
         # in-plan frozen-stats increment vs an oracle that re-derives
         # the frozen stats and full-scores the augmented corpus
         "bm25_topk_after_append": (
             T.bm25_topk_after_append,
-            T.bm25_topk_after_append_sql(),
+            T.bm25_topk_after_append_sql,
         ),
-        "stratified_sample": (T.stratified_sample, T.stratified_sample_sql()),
+        "stratified_sample": (T.stratified_sample, T.stratified_sample_sql),
         # r11: Count-Min Sketch with exact-verified point queries —
         # the frequency member of the sketch family (KMV/MG/quantiles)
-        "cms_token_counts": (T.cms_token_counts, T.cms_token_counts_sql()),
+        "cms_token_counts": (T.cms_token_counts, T.cms_token_counts_sql),
         # r11: tokenizer fertility per language (subwords/word) — the
         # over-segmentation audit; same trained merges as segment stats
         "bpe_fertility_by_lang": (
-            T.bpe_fertility_by_lang, T.bpe_fertility_by_lang_sql(),
+            T.bpe_fertility_by_lang, T.bpe_fertility_by_lang_sql,
         ),
         # benchmark decontamination: eval-set 5-gram overlap audit
         "decontaminate_overlap": (
@@ -754,27 +812,27 @@ REGISTRY.update(
             T.text_gopher_flags, _TEXT_SQLS["text_gopher_flags"],
         ),
         # Gopher-family repetition filter (duplicate-trigram fraction)
-        "text_repetition": (T.text_repetition, T.text_repetition_sql()),
+        "text_repetition": (T.text_repetition, T.text_repetition_sql),
         # domain-mixture resampling toward a uniform language mixture
-        "mixture_sample": (T.mixture_sample, T.mixture_sample_sql()),
-        "source_cap_sample": (T.source_cap_sample, T.source_cap_sample_sql()),
+        "mixture_sample": (T.mixture_sample, T.mixture_sample_sql),
+        "source_cap_sample": (T.source_cap_sample, T.source_cap_sample_sql),
         "text_unigram_surprisal": (
-            T.text_unigram_surprisal, T.text_unigram_surprisal_sql(),
+            T.text_unigram_surprisal, T.text_unigram_surprisal_sql,
         ),
         # BPE (Sennrich et al. 2016): the trainer itself is a contract
         # query — the oracle retrains every merge in unrolled SQL
-        "bpe_train_merges": (T.bpe_train_merges, T.bpe_train_merges_sql()),
-        "bpe_segment_stats": (T.bpe_segment_stats, T.bpe_segment_stats_sql()),
+        "bpe_train_merges": (T.bpe_train_merges, T.bpe_train_merges_sql),
+        "bpe_segment_stats": (T.bpe_segment_stats, T.bpe_segment_stats_sql),
         # deterministic export sharding (content-hash shard manifest)
-        "training_shards": (T.training_shards, T.training_shards_sql()),
+        "training_shards": (T.training_shards, T.training_shards_sql),
         # concat-and-chunk sequence packing (GPT-style pretraining layout)
-        "sequence_pack": (T.sequence_pack, T.sequence_pack_sql()),
+        "sequence_pack": (T.sequence_pack, T.sequence_pack_sql),
         "dedup_embedding_pairs": (
             T.dedup_embedding_pairs, _TEXT_SQLS["dedup_embedding_pairs"],
         ),
         # exact global NTILE(10) without a single-partition sort; the
         # oracle runs the textbook ntile window
-        "quality_deciles": (T.quality_deciles, T.quality_deciles_sql()),
+        "quality_deciles": (T.quality_deciles, T.quality_deciles_sql),
     }
 )
 
@@ -791,28 +849,28 @@ REGISTRY.update(
     {
         # ONE partially-aggregated max(struct) vs the oracle's
         # row_number window — same 'latest change per key'
-        "cdc_latest_state": (C.cdc_latest_state, C.cdc_latest_state_sql()),
-        "scd2_intervals": (C.scd2_intervals, C.scd2_intervals_sql()),
+        "cdc_latest_state": (C.cdc_latest_state, C.cdc_latest_state_sql),
+        "scd2_intervals": (C.scd2_intervals, C.scd2_intervals_sql),
         # r14: MERGE INTO semantics — one changelog batch of
         # insert/update/delete applied to a base snapshot in one plan
         # (anti-join on touched keys + union of new payloads)
-        "cdc_merge_apply": (C.cdc_merge_apply, C.cdc_merge_apply_sql()),
+        "cdc_merge_apply": (C.cdc_merge_apply, C.cdc_merge_apply_sql),
         # r15: ordered multi-batch MERGE — last-writer-wins compaction
         # (max-struct on batch_id) composed with one merge; the oracle
         # compacts with the textbook window argmax instead, so the
         # hash match also pins the max-struct == window equivalence
         "cdc_merge_apply_log": (
             C.cdc_merge_apply_log,
-            C.cdc_merge_apply_log_sql(),
+            C.cdc_merge_apply_log_sql,
         ),
         # 3 unrolled iterations, every rank an exact int64 — the
         # iterative-algorithm-on-Spark shape with a hash-checkable result
-        "pagerank_trade": (GR.pagerank_trade, GR.pagerank_trade_sql()),
+        "pagerank_trade": (GR.pagerank_trade, GR.pagerank_trade_sql),
         # degree-ordered triangle census over the deterministically
         # sparsified (top 5·|V| by shared-customer count) co-purchase
         # similarity graph — wedge volume m·sqrt(2m), never Σ deg²
         "copurchase_triangles": (
-            GR.copurchase_triangles, GR.copurchase_triangles_sql(),
+            GR.copurchase_triangles, GR.copurchase_triangles_sql,
         ),
     }
 )
@@ -822,7 +880,7 @@ REGISTRY.update(
 # over the duplicates-injected documents fixture — all oracle-checked.
 # ---------------------------------------------------------------------------
 
-_DEDUP_SQLS = D.oracle_sqls()
+_DEDUP_SQLS = _Pack(D.oracle_sqls)
 
 REGISTRY.update(
     {
@@ -867,10 +925,10 @@ REGISTRY.update(
         "customer_name_ed1_pairs": (
             D.customer_name_ed1_pairs, D.CUSTOMER_ED1_SQL,
         ),
-        "training_data_prep": (D.training_data_prep, D.training_data_prep_sql()),
-        "dedup_spans": (D.dedup_spans, D.dedup_spans_sql()),
+        "training_data_prep": (D.training_data_prep, D.training_data_prep_sql),
+        "dedup_spans": (D.dedup_spans, D.dedup_spans_sql),
         "training_data_prep_v2": (
-            D.training_data_prep_v2, D.training_data_prep_v2_sql(),
+            D.training_data_prep_v2, D.training_data_prep_v2_sql,
         ),
     }
 )
@@ -880,7 +938,7 @@ REGISTRY.update(
 # relational LSH ANN, label centroids — all oracle-checked.
 # ---------------------------------------------------------------------------
 
-_SIM_SQLS = S.oracle_sqls()
+_SIM_SQLS = _Pack(S.oracle_sqls)
 
 REGISTRY.update(
     {
@@ -906,7 +964,7 @@ REGISTRY.update(
         # (sequentially) trained reference codebook as literals — a
         # hash match proves distributed Lloyd reached the same model
         "similarity_ivf_kmeans": (
-            S.similarity_ivf_kmeans, S.ivf_kmeans_oracle_sql(),
+            S.similarity_ivf_kmeans, S.ivf_kmeans_oracle_sql,
         ),
         "embedding_label_centroids": (
             S.embedding_label_centroids, _SIM_SQLS["embedding_label_centroids"],
@@ -914,36 +972,36 @@ REGISTRY.update(
         # product quantization (Jégou et al. 2011): the oracle retrains
         # all PQ_M per-subspace codebooks in unrolled SQL, so a hash
         # match verifies training + encoding + ADC retrieval end-to-end
-        "similarity_pq_adc": (S.similarity_pq_adc, S.pq_adc_oracle_sql()),
+        "similarity_pq_adc": (S.similarity_pq_adc, S.pq_adc_oracle_sql),
         "similarity_pq_rerank": (
-            S.similarity_pq_rerank, S.pq_rerank_oracle_sql(),
+            S.similarity_pq_rerank, S.pq_rerank_oracle_sql,
         ),
         # IVFADC proper (coarse k-means + PQ on residuals): the oracle
         # retrains BOTH quantizer levels in unrolled SQL
-        "similarity_ivfpq": (S.similarity_ivfpq, S.ivfpq_oracle_sql()),
+        "similarity_ivfpq": (S.similarity_ivfpq, S.ivfpq_oracle_sql),
         "embedding_dim_stats": (
-            S.embedding_dim_stats, S.embedding_dim_stats_sql(),
+            S.embedding_dim_stats, S.embedding_dim_stats_sql,
         ),
         # r10: scalar int8 quantization audit — exact code checksums
         # + fixed-point reconstruction error per dimension
         "embedding_int8_stats": (
-            S.embedding_int8_stats, S.embedding_int8_stats_sql(),
+            S.embedding_int8_stats, S.embedding_int8_stats_sql,
         ),
         # r11: serve ANN from those int8 codes — ADC distance tables
         # on codes (exact int64 sums), exact-L2 rerank on the
         # shortlist only; the oracle re-quantizes and re-ranks in SQL
         "similarity_int8_adc": (
-            S.similarity_int8_adc, S.int8_adc_oracle_sql(),
+            S.similarity_int8_adc, S.int8_adc_oracle_sql,
         ),
         # SemDeDup (Abbas et al. 2023): cluster-then-dedup on the SAME
         # trained codebook as similarity_ivf_kmeans; the oracle retrains
         # the codebook and re-derives every intra-cluster keep/drop
-        "semdedup": (S.semdedup, S.semdedup_oracle_sql()),
+        "semdedup": (S.semdedup, S.semdedup_oracle_sql),
         # r14: the always-on rebuild-trigger monitor — per-list int64
         # fixedpoint quantization error of the training corpus vs a
         # drifted batch against the FROZEN codebook (SCALE.md's
         # operating rule, quantified as a contract query)
-        "ann_drift_stat": (S.ann_drift_stat, S.ann_drift_oracle_sql()),
+        "ann_drift_stat": (S.ann_drift_stat, S.ann_drift_oracle_sql),
     }
 )
 
@@ -952,7 +1010,7 @@ REGISTRY.update(
 # decode verified against stored columns, features rows-only.
 # ---------------------------------------------------------------------------
 
-_MM_SQLS = M.oracle_sqls()
+_MM_SQLS = _Pack(M.oracle_sqls)
 
 REGISTRY.update(
     {
@@ -1016,7 +1074,7 @@ from gis_etl_spark.layout import h3compat as H3  # noqa: E402
 
 REGISTRY.update(
     {
-        "h3_parent_rollup": (H3.h3_parent_rollup, H3.h3_parent_rollup_sql()),
+        "h3_parent_rollup": (H3.h3_parent_rollup, H3.h3_parent_rollup_sql),
     }
 )
 
@@ -1219,15 +1277,15 @@ REGISTRY.update(
         # MATCH_RECOGNIZE shape generalized: regex over per-user
         # type-sequence strings, match COUNTS compared cross-engine
         "event_pattern_match": (
-            R.event_pattern_match, R.event_pattern_match_sql(),
+            R.event_pattern_match, R.event_pattern_match_sql,
         ),
         # market-basket bipartite projection (item-item co-occurrence)
         "supplier_copurchase_pairs": (
-            R.supplier_copurchase_pairs, R.supplier_copurchase_sql(),
+            R.supplier_copurchase_pairs, R.supplier_copurchase_sql,
         ),
         # percent_rank / cume_dist over exact integer spend units
         "customer_spend_rank": (
-            R.customer_spend_rank, R.customer_spend_rank_sql(),
+            R.customer_spend_rank, R.customer_spend_rank_sql,
         ),
         "q11_important_parts": (R.q11_important_parts, _Q11_SQL),
         "q12_priority_by_returnflag": (R.q12_priority_by_returnflag, _Q12_SQL),
@@ -1428,13 +1486,13 @@ REGISTRY.update(
         # hub-cap honesty metric for the (now enforced) co-purchase cap
         "supplier_copurchase_audit": (
             R.supplier_copurchase_audit,
-            R.supplier_copurchase_audit_sql(),
+            R.supplier_copurchase_audit_sql,
         ),
         # pentagon-aware cellToChildren on real H3 ids: 12-pentagon
         # constant validated by re-deriving the published cell counts
         "h3_children_rollup": (
             H3.h3_children_rollup,
-            H3.h3_children_rollup_sql(),
+            H3.h3_children_rollup_sql,
         ),
     }
 )
@@ -1479,7 +1537,7 @@ REGISTRY.update(
         # digit-arithmetic children for all 110 non-pentagon base cells
         "h3_grid_ring_children": (
             H3G.h3_grid_ring_children,
-            H3G.h3_grid_ring_children_sql(),
+            H3G.h3_grid_ring_children_sql,
         ),
         # k=2 disks over synthetic res-9 cells; rows-only by design
         # (lattice walk is not SQL-expressible; laws pinned in
@@ -1569,13 +1627,13 @@ REGISTRY.update(
     {
         "h3_grid_distance_pairs": (
             H3G.h3_grid_distance_pairs,
-            H3G.h3_grid_distance_pairs_sql(),
+            H3G.h3_grid_distance_pairs_sql,
         ),
         # gridDisk itself (truncation included) vs the same SQL fold —
         # disk = hexdist<=2 over the enumerated res-2 patch
         "h3_grid_disk_members": (
             H3G.h3_grid_disk_members,
-            H3G.h3_grid_disk_members_sql(),
+            H3G.h3_grid_disk_members_sql,
         ),
     }
 )
@@ -1835,7 +1893,7 @@ REGISTRY.update(
     {
         "similarity_ivfpq_rerank": (
             S.similarity_ivfpq_rerank,
-            S.ivfpq_rerank_oracle_sql(),
+            S.ivfpq_rerank_oracle_sql,
         ),
         # bipartite incremental dedup vs a persisted corpus snapshot
         # (VERDICT r11 item 6): exact fingerprint probe + MinHash band
@@ -1854,14 +1912,14 @@ REGISTRY.update(
         # level complement of text_repetition
         "corpus_dup_ngram_fraction": (
             T.corpus_dup_ngram_fraction,
-            T.corpus_dup_ngram_fraction_sql(),
+            T.corpus_dup_ngram_fraction_sql,
         ),
         # KMV set algebra: sketch-estimated |A∪B| / |A∩B| of two
         # source groups' shingle sets, exact counts riding along —
         # deterministic sketch, so even the estimates hash-match
         "kmv_source_overlap": (
             T.kmv_source_overlap,
-            T.kmv_source_overlap_sql(),
+            T.kmv_source_overlap_sql,
         ),
         # as-of with a tolerance horizon (pandas merge_asof semantics):
         # stale context drops, clicks survive with an explicit flag
@@ -1873,7 +1931,7 @@ REGISTRY.update(
         # exact-dup footprint in one pass, fixedpoint-deterministic
         "source_data_card": (
             T.source_data_card,
-            T.source_data_card_sql(),
+            T.source_data_card_sql,
         ),
     }
 )
@@ -1888,14 +1946,14 @@ REGISTRY.update(
         # by set algebra, no exact full-universe audit in the plan
         "kmv_overlap_sketch": (
             T.kmv_overlap_sketch,
-            T.kmv_overlap_sketch_sql(),
+            T.kmv_overlap_sketch_sql,
         ),
         # IVFADC+R served from the PERSISTED bucketed index tables
         # (VERDICT r12 item 3): bit-identical to similarity_ivfpq_rerank,
         # so the same retrain-and-probe oracle pins the stored artifacts
         "similarity_ivfpq_serve": (
             S.similarity_ivfpq_serve,
-            S.ivfpq_rerank_oracle_sql(),
+            S.ivfpq_rerank_oracle_sql,
         ),
         # canonical-keeper policy per near-dup cluster: keep the
         # highest-quality member (ties -> min id); argmax via one
@@ -1915,20 +1973,20 @@ REGISTRY.update(
         # fixedpoint units -> exact integer denominator
         "mixture_temperature_weights": (
             T.mixture_temperature_weights,
-            T.mixture_temperature_weights_sql(),
+            T.mixture_temperature_weights_sql,
         ),
         # PII redaction transform (SSN -> phone -> email, pinned
         # order); oracle hash pins BYTE equality of redacted text
         "pii_redact": (
             T.pii_redact,
-            T.pii_redact_sql(),
+            T.pii_redact_sql,
         ),
         # integer-exact token-budget apportionment (Hamilton largest
         # remainder over sqrt-smoothed units): quotas sum to the
         # budget EXACTLY, all int64 arithmetic
         "mixture_token_plan": (
             T.mixture_token_plan,
-            T.mixture_token_plan_sql(),
+            T.mixture_token_plan_sql,
         ),
     }
 )
@@ -2115,7 +2173,7 @@ REGISTRY.update(
         # token quota — Σ selected ≤ quota < Σ + next-doc
         "mixture_draw_plan": (
             T.mixture_draw_plan,
-            T.mixture_draw_plan_sql(),
+            T.mixture_draw_plan_sql,
         ),
         # the draw's 100 TB rendition: hash-prefix-bucketed two-pass
         # running sum (no whole-source window partition); SAME oracle
@@ -2123,14 +2181,14 @@ REGISTRY.update(
         # proof the refinement changes nothing
         "mixture_draw_split": (
             T.mixture_draw_split,
-            T.mixture_draw_plan_sql(),
+            T.mixture_draw_plan_sql,
         ),
         # span-level PII audit (VERDICT r13 item 5): exact (kind,
         # start, len) of every match, so redaction is verifiable
         # offset-by-offset; split+prefix-sum, no position regex needed
         "pii_spans": (
             T.pii_spans,
-            T.pii_spans_sql(),
+            T.pii_spans_sql,
         ),
         # the curation CAPSTONE: raw → near_dedup → quality →
         # pii_clean → mixture_draw as one lazy plan, per-source
@@ -2139,7 +2197,7 @@ REGISTRY.update(
         # with their exact standalone expressions
         "corpus_build_funnel": (
             CB.corpus_build_funnel,
-            CB.corpus_build_funnel_sql(),
+            CB.corpus_build_funnel_sql,
         ),
     }
 )
@@ -2335,11 +2393,11 @@ REGISTRY.update(
     {
         "corpus_flags_increment": (
             CB.corpus_flags_increment,
-            CB.corpus_flags_increment_sql(),
+            CB.corpus_flags_increment_sql,
         ),
         "flags_increment_risk": (
             CB.flags_increment_risk,
-            CB.flags_increment_risk_sql(),
+            CB.flags_increment_risk_sql,
         ),
         # r17: the remediation the monitor schedules — targeted
         # re-derive of exactly the merged components the increment can
@@ -2348,7 +2406,7 @@ REGISTRY.update(
         # increment and emits increment ids + changed base ids
         "corpus_flags_rederive": (
             CB.corpus_flags_rederive,
-            CB.corpus_flags_rederive_sql(),
+            CB.corpus_flags_rederive_sql,
         ),
         # the stored-snapshot rung of incremental dedup, registered
         # against the SAME oracle as the in-plan rung — the
@@ -2727,7 +2785,7 @@ assert all(k in REGISTRY for k in _R19_FRONT), [
     k for k in _R19_FRONT if k not in REGISTRY
 ]
 
-REGISTRY = {
+REGISTRY = _Registry({
     **{k: REGISTRY[k] for k in _R19_FRONT},
     **{k: v for k, v in REGISTRY.items() if k not in _R19_FRONT},
-}
+})

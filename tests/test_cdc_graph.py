@@ -94,6 +94,18 @@ def test_pagerank_missing_input_names_table_and_dir(spark, tmp_path):
     assert "table 'lineitem'" in msg and str(tmp_path) in msg
 
 
+def test_edge_cache_evicts_dead_session_entries(spark, sf_dir):
+    """Cached trade-graph frames of another applicationId belong to a
+    stopped session; the next lookup drops them."""
+    stale = ("app-stopped-session", 0, 0, 0, 0)
+    G._EDGE_CACHE[stale] = (None, None)
+    G._edges_deg_cached(spark, sf_dir)
+    assert stale not in G._EDGE_CACHE
+    assert all(
+        k[0] == spark.sparkContext.applicationId for k in G._EDGE_CACHE
+    )
+
+
 def test_spatial_clusters_match_union_find(spark, sf_dir):
     """geo_spatial_clusters == an independent union-find over the same
     collected pair list: identical components, sizes, and id sums."""
@@ -223,6 +235,36 @@ def test_label_components_driver_path_equals_distributed(
                 comp[n] = merged
         want = {(n, min(s)) for n, s in comp.items()}
         assert via_driver == want
+
+
+@pytest.mark.parametrize("id_type", ["int", "bigint"])
+def test_label_components_small_graph_is_local_relation(spark, id_type):
+    """The driver union-find path returns an Arrow-built local relation:
+    its scans plan as LocalTableScan, never a Scan ExistingRDD over a
+    PythonRDD (which starts Python workers on every scan), and the id
+    type is the input's. Also with Arrow conversion off, as in a vanilla
+    session."""
+    from gis_etl_spark.ops import dedup as D
+
+    edges = spark.createDataFrame(
+        [(3, 1), (1, 2), (7, 8)], f"doc_a {id_type}, doc_b {id_type}"
+    )
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        off_plan = D.label_components(edges)._jdf.queryExecution()
+        assert "LocalTableScan" in off_plan.executedPlan().toString()
+    finally:
+        spark.conf.set(conf, prior)
+    labels = D.label_components(edges)
+    plan = labels._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan, plan
+    assert labels.dtypes == [("doc_id", id_type), ("component", id_type)]
+    assert sorted(map(tuple, labels.collect())) == [
+        (1, 1), (2, 1), (3, 1), (7, 7), (8, 7)
+    ]
 
 
 def test_triangle_census_matches_brute_force(spark):

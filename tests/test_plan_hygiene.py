@@ -82,6 +82,10 @@ def test_wide_table_prunes_geometry_column(spark, sf_dir):
 _GATED_QUADRATIC_BASELINES = {"similarity_near_pairs", "dedup_embedding_pairs"}
 
 
+def _cartesian(name: str, plan: str) -> bool:
+    return name not in _GATED_QUADRATIC_BASELINES and "CartesianProduct" in plan
+
+
 def test_no_cartesian_product_in_any_registry_plan(spark, sf_dir):
     """No registry query may plan a CartesianProduct or a non-broadcast
     nested-loop join, except the two explicitly gated quadratic
@@ -89,10 +93,7 @@ def test_no_cartesian_product_in_any_registry_plan(spark, sf_dir):
     is a 1-row scalar aggregate (decorrelated scalar subqueries)."""
     offenders = []
     for name, (builder, _) in REGISTRY.items():
-        plan = _plan(builder(spark, sf_dir))
-        if name in _GATED_QUADRATIC_BASELINES:
-            continue
-        if "CartesianProduct" in plan:
+        if _cartesian(name, _plan(builder(spark, sf_dir))):
             offenders.append((name, "CartesianProduct"))
     assert not offenders, offenders
 
@@ -160,6 +161,12 @@ def _window_feed_exchanges(plan_str: str) -> list[str]:
     return feeds
 
 
+def _singlepartition_window_feeds(name: str, plan: str) -> list[str]:
+    if name in _TINY_SINGLEPART_WINDOWS:
+        return []
+    return [f for f in _window_feed_exchanges(plan) if "SinglePartition" in f]
+
+
 def test_no_singlepartition_window_in_any_registry_plan(spark, sf_dir):
     """No registry query may rank/accumulate through a Window whose
     feeding Exchange is SinglePartition over unbounded input — that is
@@ -170,15 +177,20 @@ def test_no_singlepartition_window_in_any_registry_plan(spark, sf_dir):
     (_per_query_topk); allowlisted cases must be tiny by construction."""
     offenders = []
     for name, (builder, _) in REGISTRY.items():
-        if name in _TINY_SINGLEPART_WINDOWS:
-            continue
-        plan = _plan(builder(spark, sf_dir))
-        bad = [
-            f for f in _window_feed_exchanges(plan) if "SinglePartition" in f
-        ]
+        bad = _singlepartition_window_feeds(name, _plan(builder(spark, sf_dir)))
         if bad:
             offenders.append((name, bad[0]))
     assert not offenders, offenders
+
+
+@pytest.mark.parametrize("name", list(REGISTRY)[:50])
+def test_gate_window_plan_hygiene(spark, sf_dir, name):
+    """Both registry-wide audits above, applied in the default run to
+    one plan per entry of the first-50 verification window (the
+    registry-wide forms are opt-in slow receipts)."""
+    plan = _plan(REGISTRY[name][0](spark, sf_dir))
+    assert not _cartesian(name, plan)
+    assert not _singlepartition_window_feeds(name, plan)
 
 
 def test_heatmap_pyramid_conserves_mass(spark, sf_dir):
